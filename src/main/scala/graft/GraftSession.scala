@@ -38,7 +38,26 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC")
 
   def builder(shufflePartitions: Int = 200): SparkSession.Builder =
-    recommended(shufflePartitions).foldLeft(SparkSession.builder()) {
-      case (b, (k, v)) => b.config(k, v)
-    }
+    configured(recommended(shufflePartitions))
+
+  /** Core count of the local harnesses (Bench, Verify, Smoke, Explain,
+    * the tools): `SPARK_GRAFT_CPUS`, default 4. */
+  def localCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The conf set every local harness session carries, as data (same
+    * reason as [[recommended]]): one shuffle partition per core, UTC so
+    * the harnesses time and verify the same plans, no UI. */
+  def localConf(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** Builder for a local `local[cpus]` session; callers add only the
+    * confs that are theirs (Bench's codegen cache, PlanSweep's AQE off). */
+  def local(cpus: Int = localCpus): SparkSession.Builder =
+    configured(localConf(cpus))
+
+  private def configured(conf: Seq[(String, String)]): SparkSession.Builder =
+    conf.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
 }

@@ -57,8 +57,9 @@ object Tables {
   /** Memoized source DataFrames, keyed (session, variant, path, source
     * fingerprint) — the r21 fixed-cost fix: every `spark.read.parquet`
     * construction pays a file-listing + footer-schema read measured at
-    * ~50-105 ms per call on this box (tools/R21Probe), and a bench pass
-    * makes ~1500 `Tables.table` calls inside timed regions. The memo
+    * ~50-105 ms per call on this box (OPTIMIZATION_r21.md, change 1),
+    * and a bench pass makes ~1500 `Tables.table` calls inside timed
+    * regions. The memo
     * caches the resolved source RELATION (a lazy plan — never rows or
     * results; every action still scans the parquet), exactly the
     * metadata-memo class `registeredViews`/`countMemo` above already

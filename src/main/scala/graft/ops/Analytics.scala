@@ -327,19 +327,19 @@ object Analytics {
       // aggregate form takes the same exchange but hash-aggregates with
       // no sort, and since n_r_supp = 1 the qualifying R supplier is
       // recovered exactly as max(when(has_r = 1, suppkey)) — the single
-      // non-null. Output-identical (KeyTime 0.87 → see after; oracle
-      // re-verified).
+      // non-null. Output-identical (timing in OPTIMIZATION_r21.md;
+      // oracle re-verified).
       // r21 wave 5, evaluated and REJECTED: folding both levels into one
       // groupBy(okey) with size(collect_set(skey)) /
       // size(collect_set(when(R, skey))) removes the second (order-count
       // sized) exchange but demotes the FACT-sized aggregate to
       // ObjectHashAggregate — whole-stage codegen lost on every line row
-      // (plans/r21/q21_waiting_supplier_w5_after.txt), and KeyTime was a
-      // wash at sf0.1 (0.72/0.92 → 0.82/0.83 min/median). The exchange
-      // it saves carries order-count PARTIAL rows (already reduced), so
-      // at scale the codegen'd two-level form wins: the fact-sized
-      // operator stays compiled, and the extra exchange is the small
-      // one.
+      // (plans/r21/q21_waiting_supplier_w5_after.txt), and the per-key
+      // time was a wash at sf0.1 (0.72/0.92 → 0.82/0.83 min/median,
+      // OPTIMIZATION_r21.md). The exchange it saves carries order-count
+      // PARTIAL rows (already reduced), so at scale the codegen'd
+      // two-level form wins: the fact-sized operator stays compiled, and
+      // the extra exchange is the small one.
       val sup = Tables.table(s, dir, "supplier")
         .join(broadcast(Tables.table(s, dir, "nation")
             .where(col("n_name") === "NATION_3")),

@@ -305,7 +305,7 @@ object Dedup {
       // not which grams fill it. Choosing the rarest minimizes candidate
       // mass Σ_prefix df(gram), exactly the Zipf defense the jaccard
       // family's dfOrderedPrefix flag bought (64×→2.8× per decade).
-      // Unstaged KeyTime at sf0.1: 5.95 → see OPTIMIZATION_r21.md.
+      // Unstaged per-key time at sf0.1: see OPTIMIZATION_r21.md.
       val gramDf = grams.select(explode(col("g")).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("df"))
       val prefA = grams

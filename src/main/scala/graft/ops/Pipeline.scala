@@ -1240,7 +1240,8 @@ object Pipeline {
       // its previous label); the convergence count then rides the
       // checkpoint job itself as an observed metric (CollectMetrics →
       // Observation — exact, delivered by the cut's eager action on
-      // both checkpoint paths, tools/ObsProbe) instead of paying a
+      // both checkpoint paths; PipelineSpec's "reliable-checkpoint CC
+      // path matches the localCheckpoint default") instead of paying a
       // second count job per round, and the checkpointed relation
       // narrows to (doc, lbl) because `old` is consumed by the metric
       // BEFORE the cut (r21 wave 6; guide §5 driver-roundtrip cut —
@@ -1259,7 +1260,9 @@ object Pipeline {
       // already completed here, so delivery is only listener-bus latency —
       // but a plain obs.get would HANG the fixpoint forever if a Spark
       // behavior change stopped CollectMetrics firing on either cut path.
-      // Fail loudly instead, like the round cap (and tools/ObsProbe).
+      // Fail loudly instead, like the round cap. PipelineSpec's
+      // "reliable-checkpoint CC path matches the localCheckpoint default"
+      // exercises delivery on the reliable cut.
       // NOTE the metric's contract is SIGN-ONLY on the reliable-checkpoint
       // path: eager df.checkpoint() re-executes the plan in the
       // checkpoint-write job after the materializing count, so the
@@ -1277,7 +1280,8 @@ object Pipeline {
             throw new IllegalStateException(
               "ccJump: convergence metric not delivered within 120 s of " +
                 "the checkpoint action — the cut path no longer fires " +
-                "CollectMetrics (see tools/ObsProbe)")
+                "CollectMetrics (see PipelineSpec, \"reliable-checkpoint " +
+                "CC path matches the localCheckpoint default\")")
         }
       // Round N-1's labels were last read by the union inside `next` —
       // retire their checkpoint now that round N is on disk.

@@ -230,11 +230,12 @@ object Streams {
     * session conf `graft.drain.statePartitions`): each stateful operator
     * spins up one state-store instance PER shuffle partition per
     * micro-batch, a fixed cost that dwarfs the per-row work at test SF.
-    * Probed on this box (tools/StreamProbe, sf0.1, 5 keys): 8 partitions
-    * 8.85 s / 4: 7.09 / 2: 6.19 / 1: 5.93; RocksDB at 8 partitions
-    * 7.62 s — still behind HDFS-backed at low partition counts, so it
-    * stays off for drains. tools/DrainTune sized the r7 defaults over all
-    * 7 draining keys: statePartitions 2→1 and the 4 MB drain-scoped
+    * Probed on this box (ROUND3_NOTES.md item 7, sf0.1, 5 keys): 8
+    * partitions 8.85 s / 4: 7.09 / 2: 6.19 / 1: 5.93; RocksDB at 8
+    * partitions 7.62 s — still behind HDFS-backed at low partition
+    * counts, so it stays off for drains. The r7 drain sweep
+    * (ROUND7_NOTES.md item 4) sized the defaults over all 7 draining
+    * keys: statePartitions 2→1 and the 4 MB drain-scoped
     * maxPartitionBytes are each worth ~5-8%. Results are unaffected —
     * state partition count never changes WHAT is computed — and the
     * previous values are always restored. On a real cluster raise it to
@@ -302,8 +303,9 @@ object Streams {
     // partial agg of ~100k rows at sf0.1) would run as a SINGLE task —
     // measured as the bulk of addBatch. Scoping maxPartitionBytes down
     // for the drain splits the file across cores (1 MB → ~10 map tasks
-    // at bench SF — tools/DrainTune measured 1 MB consistently fastest;
-    // tune via `graft.drain.maxPartitionBytes`, ≤0 disables). Split-size
+    // at bench SF — the r7 drain sweep (ROUND7_NOTES.md item 4)
+    // measured 1 MB consistently fastest; tune via
+    // `graft.drain.maxPartitionBytes`, ≤0 disables). Split-size
     // never changes WHAT is computed, only scan parallelism — on a real
     // cluster the source is many files and this is moot.
     val mpb = s.conf.getOption("graft.drain.maxPartitionBytes")
@@ -760,9 +762,10 @@ object Streams {
     // the batch touches are merged and rewritten, untouched bucket files
     // are carried forward by hardlink — version-write bytes are
     // touched-bucket-proportional, not snapshot-proportional
-    // (UpsertProbe measures it), and a replayed micro-batch id
-    // (foreachBatch redelivery after a checkpoint restart) republishes
-    // idempotently — see [[mergeBatchFn]] for the derived-prev +
+    // (measured in ROUND10_NOTES.md and ROUND12_NOTES.md), and a
+    // replayed micro-batch id (foreachBatch redelivery after a
+    // checkpoint restart) republishes idempotently — see
+    // [[mergeBatchFn]] for the derived-prev +
     // deferred-retirement discipline that makes a mid-drain crash +
     // restart-from-the-same-checkpoint converge to the identical
     // snapshot (UpsertRecoverySpec drives that cycle). Retired versions
@@ -1077,7 +1080,8 @@ object Streams {
             // plain full merge + rewrite — fast-path them away. The
             // incremental machinery below stays the scale path (a small
             // CDC batch over a 10k-bucket snapshot touches few buckets)
-            // and stays exercised by UpsertIncrementalSpec + UpsertProbe.
+            // and stays exercised by UpsertIncrementalSpec (its knee is
+            // measured in ROUND12_NOTES.md).
             writeBucketedSnapshot(upsertMerge(prevDf, bl),
               name, loc, n)
           } else {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke probe for the embedding-similarity family
@@ -22,7 +21,8 @@ import org.apache.spark.sql.functions._
   * that baseline for A/B. AnnSpec asserts the shapes are bit-identical.
   *
   * Not part of the driver contract; run manually, numbers recorded in
-  * ROUND6_NOTES.md. Exit code 1 on a violated bound.
+  * ROUND6_NOTES.md (taken at SPARK_GRAFT_CPUS=32; the session follows
+  * that variable, default 4). Exit code 1 on a violated bound.
   */
 object AnnScaleProbe {
 
@@ -32,13 +32,8 @@ object AnnScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0).toInt else 5000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-ann-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
+      .appName("graft-ann-scale-probe").getOrCreate()
     // Corpus-sized rankings auto-arm the sharded two-stage shape since
     // round 7 (LOSSLESS — total order, AnnSpec asserts bit-parity), so
     // the probe's default leg measures exactly what the declared keys

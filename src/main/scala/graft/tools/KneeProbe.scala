@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.ops.{Dedup, Pipeline}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Knee-point probe for the flag-gated scale paths (r11 verdict item 5):
@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
   *     production ingest shape) and the CDC upsert on m× events.
   *
   * Per-bucket compaction's knee (the third flag-gated path the verdict
-  * names) is measured by tools/UpsertProbe's snapshot ladder — its axis
-  * is snapshot/batch ratio, not corpus multiplier, so it keeps its own
-  * harness. Scratch tool, not part of the driver contract; numbers in
+  * names) was measured by a snapshot ladder (ROUND12_NOTES.md) — its axis
+  * is snapshot/batch ratio, not corpus multiplier, so it is not a leg
+  * here. Scratch tool, not part of the driver contract; numbers in
   * ROUND12_NOTES.md. Usage: runMain graft.tools.KneeProbe [sfDir] [legs]
   * — `legs` is an optional subset of "ABCDEFGHIJ" (default all); the D/E loop
   * runs when either letter is selected.
@@ -62,12 +62,7 @@ object KneeProbe {
   private def run(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val legs = args.lift(1).getOrElse("ABCDEFGHIJ").toUpperCase
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def t(tag: String)(f: => Long): Unit = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r14): sweep every non-streaming declared key's executed plan
   * for silent degradations —
   *  - SortAggregate where a hash agg may have been intended (struct/array
@@ -23,10 +21,8 @@ object PlanSweep {
     // — it reported join_fuzzy_blocked clean while that key's verify
     // stage failed Janino compilation outright (review finding). The
     // SortAggregate/Cartesian/rescan checks are AQE-independent.
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
+      .config("spark.sql.adaptive.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // default = runtime view (staged artifacts in place, the plans the
     // bench actually runs); `--nostage` inlines every build for

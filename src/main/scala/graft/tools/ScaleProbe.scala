@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.ops.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /** Scale smoke probe for the two heaviest pipelines (`dedup_cluster`,
   * `pipeline_clean_pack`): synthesizes corpora at 1×, 10× and 100× the
@@ -148,11 +147,7 @@ object ScaleProbe {
     val upsertMode = mode == "upsert"
     val rest = if (mode.nonEmpty) args.drop(1) else args
     val base = rest.headOption.map(_.toInt).getOrElse(5000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.local(32)
       // The documented Zipfian-corpus posture (LOSSLESS — identical pair
       // set, see Dedup.ngramPairs): rarest-grams-first prefix indexing.
       // The probe corpus is deliberately Zipf-ish, and at the 500k leg the

@@ -2,12 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftSession's recommended confs are asserted as DATA (building a
-  * session against the already-running shared test context would silently
-  * drop static confs and mutate the shared session — proving nothing and
-  * leaking settings into later suites). The extension mechanics — the one
-  * part that needs a live session — are exercised on an isolated
-  * newSession whose state is not shared. */
+/** GraftSession's recommended and local confs are asserted as DATA
+  * (building a session against the already-running shared test context
+  * would silently drop static confs and mutate the shared session —
+  * proving nothing and leaking settings into later suites). The
+  * extension mechanics — the one part that needs a live session — are
+  * exercised on an isolated newSession whose state is not shared. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("recommended confs carry the cluster stance") {
@@ -20,6 +20,16 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c("spark.sql.session.timeZone") === "UTC")
     // builder() must accept the full set without throwing
     GraftSession.builder(7)
+  }
+
+  test("local(n) carries the harness conf set") {
+    assert(GraftSession.localConf(3).toMap === Map(
+      "spark.master" -> "local[3]",
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false"))
+    // local() must accept the full set without throwing
+    GraftSession.local(3)
   }
 
   test("the extension makes graft_cosine callable from SQL text") {

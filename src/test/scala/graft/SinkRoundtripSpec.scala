@@ -12,26 +12,33 @@ class SinkRoundtripSpec extends AnyFunSuite {
   private lazy val result =
     SparkEntry.queries("agg_pricing_summary")(spark, sf).cache()
 
-  private def tmp(suffix: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_sink_$suffix").toString + "/out"
+  /** Runs `body` on an `out` path under a fresh `graft_sink_<suffix>`
+    * temp root and deletes that root afterwards, pass or fail. */
+  private def withTmp(suffix: String)(body: String => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_sink_$suffix")
+    try body(root.toString + "/out") finally Staging.deleteRecursively(root)
+  }
 
   test("parquet sink round-trip") {
-    val p = tmp("parquet")
-    result.write.mode("overwrite").parquet(p)
-    assert(rowSet(spark.read.parquet(p)) === rowSet(result))
+    withTmp("parquet") { p =>
+      result.write.mode("overwrite").parquet(p)
+      assert(rowSet(spark.read.parquet(p)) === rowSet(result))
+    }
   }
 
   test("csv sink round-trip") {
-    val p = tmp("csv")
-    result.write.mode("overwrite").option("header", "true").csv(p)
-    val back = spark.read.schema(result.schema).option("header", "true").csv(p)
-    assert(rowSet(back) === rowSet(result))
+    withTmp("csv") { p =>
+      result.write.mode("overwrite").option("header", "true").csv(p)
+      val back = spark.read.schema(result.schema).option("header", "true").csv(p)
+      assert(rowSet(back) === rowSet(result))
+    }
   }
 
   test("orc sink round-trip") {
-    val p = tmp("orc")
-    result.write.mode("overwrite").orc(p)
-    assert(rowSet(spark.read.orc(p)) === rowSet(result))
+    withTmp("orc") { p =>
+      result.write.mode("overwrite").orc(p)
+      assert(rowSet(spark.read.orc(p)) === rowSet(result))
+    }
   }
 
   test("source_orc key equals the raw orders projection") {
@@ -147,10 +154,11 @@ class SinkRoundtripSpec extends AnyFunSuite {
   }
 
   test("json sink round-trip") {
-    val p = tmp("json")
-    result.write.mode("overwrite").json(p)
-    val back = spark.read.schema(result.schema).json(p)
-    assert(rowSet(back) === rowSet(result))
+    withTmp("json") { p =>
+      result.write.mode("overwrite").json(p)
+      val back = spark.read.schema(result.schema).json(p)
+      assert(rowSet(back) === rowSet(result))
+    }
   }
 
   test("dynamic overwrite kept every untouched day (static would wipe " +

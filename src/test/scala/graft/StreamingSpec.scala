@@ -4,6 +4,7 @@ import graft.streaming.Streams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY §2.8 / §5: stream-vs-batch equality for the streaming keys, run
@@ -16,19 +17,25 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - append-mode watermarked queries may drop rows that arrive after the
   *    watermark passed (file order is not time order) => output ⊆ batch.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark._
+
+  private var srcRoot: Option[java.nio.file.Path] = None
 
   /** events split into 3 parquet files (raw nanos Long ts, like the
     * source file) so maxFilesPerTrigger=1 yields 3 micro-batches. */
   private lazy val srcDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_multi").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_multi")
+    srcRoot = Some(dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(Tables.path(sf, "events"))
-      .repartition(3).write.mode("overwrite").parquet(dir)
-    dir
+      .repartition(3).write.mode("overwrite").parquet(dir.toString)
+    dir.toString
   }
+
+  // the split source is shared by every test: delete it once they all ran
+  override def afterAll(): Unit =
+    try srcRoot.foreach(Staging.deleteRecursively) finally super.afterAll()
 
   private def stream3(maxFiles: Int = 1): DataFrame =
     Streams.eventsStreamDir(spark, srcDir, Some(maxFiles))
